@@ -961,6 +961,9 @@ def _gs_band_kernel(pdf):
 _MP_LEN = 600   # calendar-bounded series prefix (hours)
 _MP_M = 24      # window length (one day)
 _MP_EXCL = 12   # trivial-match exclusion zone
+# _mp_kernel packs (dist, j) into dist*1024 + j: every window index j
+# must stay below 1024
+assert _MP_LEN - _MP_M + 1 < 1024
 
 
 def _mp_kernel(batches):

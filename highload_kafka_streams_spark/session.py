@@ -7,9 +7,9 @@ builds a session for tests/bench with the same settings plus
 builder-only ones.
 
 Scale posture (SURVEY.md §4): AQE on (skew joins, partition coalescing),
-modest shuffle partitions for local runs (overridable — a real cluster
-would use ~2-3× total cores), UTC timezone for deterministic timestamp
-semantics, Arrow enabled for the pandas-UDF paths.
+shuffle partitions equal to the session's cores (``defaultParallelism``),
+UTC timezone for deterministic timestamp semantics, Arrow enabled for the
+pandas-UDF paths.
 """
 
 from __future__ import annotations
@@ -38,10 +38,6 @@ _RUNTIME_CONFS: dict[str, str] = {
     # cover the fixture dims (region 5, nation 25, supplier 1k, part 20k,
     # customer 15k rows at sf0.1) so star joins broadcast instead of shuffle
     "spark.sql.autoBroadcastJoinThreshold": "64MB",
-    # runtime-settable: driver-provided vanilla sessions otherwise default
-    # to 200 shuffle partitions — needless scheduling overhead at test SFs
-    # (a real cluster sizes this ~2-3× total cores; AQE coalesces down)
-    "spark.sql.shuffle.partitions": "32",
     # maxSplitBytes = min(maxPartitionBytes, max(openCostInBytes,
     # totalBytes/minPartitionNum)). Test-SF tables are single-digit MB, so
     # the default 4 MB open cost pins EVERY scan to one split — one core
@@ -89,8 +85,27 @@ def _ship_package_to_workers(spark: SparkSession) -> None:
 
 
 def configure_session(spark: SparkSession) -> SparkSession:
-    """Apply the engine's runtime confs to an existing session (idempotent)."""
-    for k, v in _RUNTIME_CONFS.items():
+    """Apply the engine's runtime confs to an existing session (idempotent).
+
+    ``spark.sql.shuffle.partitions`` is set to the session's own
+    ``defaultParallelism``: one shuffle partition per core, on any host.
+    """
+    confs = dict(_RUNTIME_CONFS)
+    try:
+        # Each stateful streaming operator runs, and commits on every
+        # micro-batch, one state store per shuffle partition, so a count
+        # above the core count only multiplies commits (32 RocksDB stores
+        # per trigger on a 4-core host ran a windowed count at under a
+        # third of the rate of 4). Vanilla sessions default to 200. AQE
+        # still coalesces batch shuffles, and a stateful query restarted
+        # from a checkpoint keeps the count recorded there.
+        confs["spark.sql.shuffle.partitions"] = str(
+            spark.sparkContext.defaultParallelism
+        )
+    except AttributeError:
+        # Connect-style sessions expose no sparkContext; keep their count
+        pass
+    for k, v in confs.items():
         try:
             spark.conf.set(k, v)
         except Exception:
@@ -109,25 +124,20 @@ def configure_session(spark: SparkSession) -> SparkSession:
 def get_spark(
     app_name: str = "highload-kafka-streams-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with the engine defaults.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env) or
-    ``local[*]``. ``shuffle_partitions`` defaults to 32 — on a real
-    cluster this should be sized to ~2-3× total executor cores / the
-    target partition size, and AQE coalesces the small ones anyway.
+    ``local[*]``. Shuffle partitions follow the session's cores (see
+    ``configure_session``).
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
 
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )

@@ -10,6 +10,22 @@ def test_entry_runs(spark):
     assert "sum_qty" in df.columns
 
 
+def test_configure_session_sizes_shuffle_partitions_to_cores(spark):
+    """A caller-built vanilla session (200 shuffle partitions) gets one
+    shuffle partition, hence one state store per stateful operator, per
+    core of the session it runs on."""
+    from highload_kafka_streams_spark.session import configure_session
+
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "200")
+        configure_session(spark)
+        assert spark.conf.get(key) == str(spark.sparkContext.defaultParallelism)
+    finally:
+        spark.conf.set(key, prev)
+
+
 def test_queries_and_oracle_keys_align(spark):
     qs = ent.queries()
     osql = ent.oracle_sql()

@@ -420,7 +420,11 @@ def test_checkpoint_restart_resumes_exactly_once(spark, sf_smoke, tmp_path):
     checkpoint must resume from the offset log and produce totals equal
     to one batch pass over everything — no double counting of the first
     half (KS processing.guarantee=exactly_once_v2 ≙ Spark checkpoint +
-    idempotent sink)."""
+    idempotent sink). The restart runs under a different
+    ``spark.sql.shuffle.partitions`` (the engine derives it from the
+    session's cores) and must keep the state partitioning its checkpoint
+    recorded: a checkpoint written on an N-core host restarts on an
+    M-core host."""
     from highload_kafka_streams_spark.streaming.sinks import (
         idempotent_parquet_sink,
         read_latest_per_key,
@@ -452,11 +456,21 @@ def test_checkpoint_restart_resumes_exactly_once(spark, sf_smoke, tmp_path):
             .start()
         )
         q.awaitTermination(120)
+        return q.lastProgress["stateOperators"][0]["numShufflePartitions"]
 
-    run_pass()  # first run: half1 only
-    # "crash": the query object is gone; append the second half
-    half2.write.mode("append").parquet(src)
-    run_pass()  # restart with the same checkpoint — resumes offsets
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    try:
+        n_first = run_pass()  # first run: half1 only
+        assert n_first == int(prev)
+        # "crash": the query object is gone; append the second half and
+        # restart on a "host" with a different core count
+        half2.write.mode("append").parquet(src)
+        spark.conf.set(key, str(n_first + 1))
+        n_restart = run_pass()  # same checkpoint — resumes offsets
+    finally:
+        spark.conf.set(key, prev)
+    assert n_restart == n_first
 
     got = {
         (r["event_type"], r["n"])
