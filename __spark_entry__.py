@@ -10,7 +10,11 @@ Ordering is driver-facing and SELF-MAINTAINING (registry._ordered_names
 reads the driver's own CORRECTNESS_r*.json files): oracle-backed
 queries with no driver-green row yet lead the checked prefix in age
 order, then already-green queries oldest-evidence-first, then
-rows-only queries last.
+rows-only queries last. A green row counts only if the committed
+QUERY_HASHES.json ledger records the query with ``since_round`` no later
+than that row's round — the ledger decides, no source is hashed here;
+``qhash.drift()`` (enforced by the tests and the oracle preflight) keeps
+the ledger in sync with the code.
 """
 
 from __future__ import annotations

@@ -21,7 +21,7 @@ from dataclasses import dataclass
 import duckdb
 import pandas as pd
 
-from highload_kafka_streams_spark import registry
+from highload_kafka_streams_spark import qhash, registry
 from highload_kafka_streams_spark.io import TABLES
 
 
@@ -162,27 +162,6 @@ def run_all(spark, sf_dir: str, names: list[str] | None = None) -> list[CompareR
     return results
 
 
-def ledger_drift() -> list[str]:
-    """Queries whose current content hash diverged from QUERY_HASHES.json.
-
-    Shared by the full-preflight gate below and
-    ``tests/test_entry.py::test_query_hash_ledger_in_sync_with_registry``
-    so the CLI and the suite can never disagree about what "in sync"
-    means. A drifted ledger silently demotes driver-green evidence
-    (registry._driver_green_rounds ignores rows whose hash moved), so a
-    preflight that passed with a stale ledger would certify a round whose
-    CORRECTNESS evidence is about to be discarded — the round-6 snapshot
-    shipped exactly that. Returns sorted names; empty means in sync.
-    """
-    from highload_kafka_streams_spark import qhash
-
-    ledger = qhash.load_ledger() or {}
-    cur = qhash.current_hashes()
-    return sorted(
-        n for n, h in cur.items() if n not in ledger or ledger[n].get("hash") != h
-    )
-
-
 def main() -> int:
     from highload_kafka_streams_spark.session import get_spark
 
@@ -191,9 +170,11 @@ def main() -> int:
     if names is None:
         # FULL preflight doubles as the round-end gate: refuse to certify
         # a tree whose hash ledger is stale (run `qhash update --round N`
-        # first). Targeted runs (explicit names) skip this so mid-build
+        # first) — the registry trusts the ledger's since_round, so a
+        # stale ledger would keep counting evidence for changed code.
+        # Targeted runs (explicit names) skip this so mid-build
         # iteration stays cheap.
-        drifted = ledger_drift()
+        drifted = qhash.drift()
         if drifted:
             print(
                 "LEDGER DRIFT — QUERY_HASHES.json is stale for "

@@ -8,33 +8,28 @@ driver evidence from round 2, against the OLD code). Fix: every query
 gets a content hash over its decorated source (which includes the
 ``@query`` decorator line and therefore the oracle SQL) plus the
 registered oracle string, recorded in ``QUERY_HASHES.json`` at the repo
-root as ``{name: {"hash": h, "since_round": N}}`` — "this
-implementation has been in place since round N's verification ran".
+root as ``{name: {"hash": h, "helpers": hh, "since_round": N}}`` —
+"this implementation has been in place since round N's verification
+ran". ``helpers`` (r9) hashes the transitive source of every
+module-private (``_``-prefixed) package function the query references,
+found by AST walk, so a rewrite hidden in a shared helper (e.g. the
+pair-derivation pipelines in llm/dedup.py) counts as a rewrite of
+every consumer.
 
-``registry._driver_green_rounds`` then counts a green CORRECTNESS row
-from round R only when the ledger says the CURRENT hash was already in
-place at round R (``hash == current and since_round <= R``). A query
-whose code or oracle changed after its last green round re-enters the
-never-green tier and jumps to the front of the driver window.
+``registry._driver_green_rounds`` counts a green CORRECTNESS row from
+round R only when the ledger records the query with ``since_round <=
+R``; it never hashes sources. ``drift()`` keeps that sound: the tier-1
+suite, the full oracle preflight and ``qhash stale`` all require the
+ledger to match the live code, so a query changed after its last green
+round is re-stamped by the round-end update and jumps to the front of
+the driver window.
 
 Maintenance: run ``python -m highload_kafka_streams_spark.qhash update
 --round N`` at the end of round N's build (part of the round-end
-ritual). Entries whose hash changed (or are new) get
+ritual). Entries whose ``(hash, helpers)`` changed (or are new) get
 ``since_round = N``; unchanged entries keep their earlier round.
-
-Helper coverage (r9, closes the r8 advisor's gap): the main hash still
-covers only the decorated function's own source (so the ledger format
-and every recorded hash stay stable), but the ledger now ALSO records a
-``helpers`` hash — the transitive source of every module-private
-(``_``-prefixed) package function the query references, found by AST
-walk (plain ``Name`` loads plus ``from X import _y`` inside the body).
-The staleness gate demands the helpers hash match whenever the ledger
-records one, and ``update_ledger`` bumps ``since_round`` when it moves
-— so a behavior change hidden entirely in a shared helper (e.g. the
-pair-derivation pipelines in llm/dedup.py) now demotes its consumers
-back into the driver's verification window. Migration rule: entries
-recorded before r9 carry no ``helpers`` field and gate on the main
-hash alone until the round-end update writes one.
+``qhash stale`` prints ``drift()`` as JSON and exits 1 when it is
+non-empty, so a commit hook or CI step can run it.
 """
 
 from __future__ import annotations
@@ -210,6 +205,22 @@ def load_ledger(root: Path | None = None) -> dict[str, dict] | None:
     return data if isinstance(data, dict) else None
 
 
+def drift(root: Path | None = None) -> list[str]:
+    """Sorted names on which QUERY_HASHES.json disagrees with the live
+    code: unrecorded, stale ``hash``, stale ``helpers``, or recorded but
+    no longer registered. The one definition of "in sync", shared by
+    the oracle preflight, the ``stale`` CLI and the tier-1 suite."""
+    ledger = load_ledger(root) or {}
+    cur = current_hashes()
+    cur_helpers = current_helper_hashes()
+    return sorted(
+        n for n in ledger.keys() | cur.keys()
+        if n not in ledger or n not in cur
+        or ledger[n].get("hash") != cur[n]
+        or ledger[n].get("helpers") != cur_helpers[n]
+    )
+
+
 def update_ledger(round_no: int, root: Path | None = None) -> dict[str, int]:
     """Refresh QUERY_HASHES.json against the live registry.
 
@@ -223,31 +234,21 @@ def update_ledger(round_no: int, root: Path | None = None) -> dict[str, int]:
     stats = {"new": 0, "changed": 0, "unchanged": 0, "removed": 0}
     for name, h in sorted(cur.items()):
         prev = old.get(name)
-        hh = cur_helpers.get(name, "0" * 16)
-        if prev is None:
-            out[name] = {"hash": h, "helpers": hh, "since_round": round_no}
-            stats["new"] += 1
-        elif prev.get("hash") != h or (
-            "helpers" in prev and prev["helpers"] != hh
-        ):
-            # main source moved, or a recorded private-helper closure
-            # moved — either way the implementation changed since the
-            # last green and must re-enter the verification window
-            out[name] = {"hash": h, "helpers": hh, "since_round": round_no}
-            stats["changed"] += 1
-        else:
-            # unchanged main hash; record (or refresh a first-time)
-            # helpers hash without bumping since_round — pre-r9 entries
-            # have no helper baseline to compare against (documented
-            # migration rule in the module docstring)
-            out[name] = {**prev, "helpers": hh}
+        live = {"hash": h, "helpers": cur_helpers[name]}
+        if prev is not None and all(prev.get(k) == v for k, v in live.items()):
+            out[name] = prev
             stats["unchanged"] += 1
+        else:
+            # new, or source, oracle or helper closure moved: re-enter
+            # the verification window
+            out[name] = {**live, "since_round": round_no}
+            stats["new" if prev is None else "changed"] += 1
     stats["removed"] = len([n for n in old if n not in cur])
     (root / HASH_FILE).write_text(json.dumps(out, indent=1, sort_keys=True) + "\n")
     return stats
 
 
-def main(argv: list[str] | None = None) -> None:
+def main(argv: list[str] | None = None) -> int:
     import argparse
 
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
@@ -255,20 +256,17 @@ def main(argv: list[str] | None = None) -> None:
     up = sub.add_parser("update", help="refresh QUERY_HASHES.json")
     up.add_argument("--round", type=int, required=True, dest="round_no")
     up.add_argument("--root", default=None)
-    st = sub.add_parser("stale", help="list queries whose hash diverged from the ledger")
+    st = sub.add_parser("stale", help="print drift() as JSON; exit 1 if non-empty")
     st.add_argument("--root", default=None)
     ns = ap.parse_args(argv)
     if ns.cmd == "update":
         stats = update_ledger(ns.round_no, ns.root and Path(ns.root))
         print(json.dumps(stats))
-    elif ns.cmd == "stale":
-        ledger = load_ledger(ns.root and Path(ns.root)) or {}
-        cur = current_hashes()
-        stale = sorted(
-            n for n, h in cur.items() if n not in ledger or ledger[n].get("hash") != h
-        )
-        print(json.dumps(stale))
+        return 0
+    drifted = drift(ns.root and Path(ns.root))
+    print(json.dumps(drifted))
+    return 1 if drifted else 0
 
 
 if __name__ == "__main__":
-    main()
+    raise SystemExit(main())

@@ -104,7 +104,13 @@ def scoped_persist(df: DataFrame) -> DataFrame:
     The registry is THREAD-LOCAL: harnesses that build/run queries from
     several driver threads (the parallel oracle-parity lane, guide
     §2.6) must not release each other's still-live caches — each
-    thread's build sequence manages its own."""
+    thread's build sequence manages its own.
+
+    Only registry-dispatched builds release (see ``query``), and release
+    assumes each query executes before the next one builds: a harness
+    that builds several DataFrames before executing any runs the earlier
+    ones uncached (correct, since an unpersisted frame recomputes, but
+    slower). The last query's caches stay until ``release_persists()``."""
     df.persist()
     _tracked().append(df)
     return df
@@ -122,7 +128,14 @@ def release_persists() -> None:
 
 
 def query(name: str, oracle: str | None = None):
-    """Decorator: register a query (and optionally its oracle SQL)."""
+    """Decorator: register a query (and optionally its oracle SQL).
+
+    ``QUERIES`` holds a wrapper that calls ``release_persists()`` first,
+    but the decorator returns the UNWRAPPED function, so only
+    registry-dispatched calls release. Deliberate: queries that call
+    another query's function directly (``q_eval_sketch_recall``,
+    ``q_eval_ann_recall``, ``q_text_lang_confusion``) would otherwise
+    drop their own caches mid-build."""
 
     def deco(fn: QueryFn) -> QueryFn:
         import functools
@@ -572,7 +585,7 @@ _WINDOW_TAIL = (
 def _driver_green_rounds(root=None, *, pre_gate: bool = False) -> dict[str, int]:
     """Latest driver round each query was GREEN in, from the
     ``CORRECTNESS_r*.json`` files the driver writes to the repo root.
-    ``pre_gate=True`` skips the hash-staleness gate — the callers use the
+    ``pre_gate=True`` skips the ledger gate — the callers use the
     difference (pre-gate green minus gated green) to identify REWRITTEN-
     since-green queries, which lead the verification queue.
 
@@ -581,12 +594,14 @@ def _driver_green_rounds(root=None, *, pre_gate: bool = False) -> dict[str, int]
     mismatched latest row removes the query from the green set so it
     returns to the front of the verification window.
 
-    Round-5 staleness gate: a green row from round R only counts if
-    ``QUERY_HASHES.json`` records that the CURRENT implementation hash
-    was already in place at round R (``hash == current and
-    since_round <= R``) — a query rewritten after its green round
-    re-enters the never-green tier. See ``qhash.py``. If the ledger
-    file is absent the gate is skipped (legacy behavior).
+    Staleness gate: a green row from round R only counts if
+    ``QUERY_HASHES.json`` records the query with ``since_round <= R``.
+    The ledger alone decides (nothing is hashed here): ``qhash update``
+    re-stamps ``since_round`` when a query's source, oracle or helper
+    closure moves, and ``qhash.drift()`` keeps the ledger in sync, so a
+    query rewritten after its green round re-enters the never-green
+    tier. See ``qhash.py``. If the ledger file is absent the gate is
+    skipped (legacy behavior).
 
     ``root`` is overridable for tests; production always reads the
     repo root this package sits in.
@@ -628,27 +643,11 @@ def _driver_green_rounds(root=None, *, pre_gate: bool = False) -> dict[str, int]
 
     ledger = qhash.load_ledger(root)
     if ledger is not None:
-        cur = qhash.current_hashes()
-        # r9: the gate also checks the private-helper closure hash when
-        # the ledger records one — a rewrite hidden entirely inside a
-        # shared helper (the r8 advisor's blind spot) demotes every
-        # consumer back into the verification window. Entries recorded
-        # before r9 carry no "helpers" field and gate on the main hash
-        # alone (migration rule, qhash.py docstring).
-        cur_helpers: dict[str, str] | None = None
-        if any("helpers" in rec for rec in ledger.values() if isinstance(rec, dict)):
-            cur_helpers = qhash.current_helper_hashes()
         green = {
             n: rnd
             for n, rnd in green.items()
             if (rec := ledger.get(n)) is not None
-            and rec.get("hash") == cur.get(n)
             and rec.get("since_round", 10**9) <= rnd
-            and (
-                "helpers" not in rec
-                or cur_helpers is None
-                or rec["helpers"] == cur_helpers.get(n)
-            )
         }
     return green
 
@@ -665,7 +664,7 @@ def _ordered_names() -> list[str]:
     """Never-driver-green oracle-backed queries first, then green ones
     oldest-evidence-first, then rows-only queries tail-pinned. Within the
     never-green tier (r6 verdict item 6): queries REWRITTEN after a green
-    round (formerly green, demoted by the hash-staleness gate) lead, in
+    round (formerly green, demoted by the ledger gate) lead, in
     ledger order, ahead of never-yet-verified new additions — a stale
     rewrite is a regression-in-waiting on already-claimed surface and
     must not queue behind ~90 newer queries for four rounds. See the

@@ -169,12 +169,13 @@ def test_driver_green_rounds_parsing(tmp_path):
 
 
 def test_green_rounds_hash_staleness_gate(tmp_path):
-    """Round-5 contract (VERDICT r4 item 1): a driver-green row only
-    counts while the implementation it verified is still the current
-    one. QUERY_HASHES.json records {hash, since_round}; a green row at
-    round R survives iff hash matches the live code AND
-    since_round <= R. A rewritten-since-green query (hash moved, or
-    recorded later than its evidence) re-enters the never-green tier."""
+    """A driver-green row only counts while the implementation it
+    verified is still the current one. QUERY_HASHES.json records
+    {hash, helpers, since_round}; a green row at round R survives iff
+    the query is recorded with since_round <= R. The gate reads the
+    ledger alone: a rewrite (hash moved) demotes the query once the
+    round-end `qhash update` re-stamps it, and `qhash.drift` flags the
+    ledger until then."""
     import json
 
     from highload_kafka_streams_spark import qhash
@@ -183,20 +184,20 @@ def test_green_rounds_hash_staleness_gate(tmp_path):
     greenrow = {"rows_match": True, "schema_match": True,
                 "hash_match": True, "err": None}
     (tmp_path / "CORRECTNESS_r02.json").write_text(json.dumps({
-        "q_current": greenrow,      # hash matches, recorded r1 <= 2 → green
-        "q_rewritten": greenrow,    # ledger hash != live hash → stale
+        "q_current": greenrow,      # recorded r1 <= 2 → green
+        "q_rewritten": greenrow,    # ledger hash != live → re-stamped r3
         "q_late_record": greenrow,  # since_round 4 > evidence round 2 → stale
         "q_unrecorded": greenrow,   # not in ledger at all → stale
     }))
-    # live hashes for two fake queries registered just for this test
+    # live hashes for fake queries registered just for this test
     from highload_kafka_streams_spark import registry as reg
 
     def fake(spark, sf_dir):  # pragma: no cover - never executed
         return None
 
-    # load BEFORE snapshotting (same hazard as the helper-gate test):
-    # current_hashes() triggers load_all(), and restoring a pre-load
-    # snapshot with _loaded True would empty the registry process-wide
+    # load BEFORE snapshotting: update_ledger() triggers load_all(), and
+    # restoring a pre-load snapshot with _loaded True would empty the
+    # registry process-wide
     reg.load_all()
     saved_q = dict(reg.QUERIES)
     saved_o = dict(reg.ORACLE)
@@ -204,39 +205,59 @@ def test_green_rounds_hash_staleness_gate(tmp_path):
         for n in ("q_current", "q_rewritten", "q_late_record", "q_unrecorded"):
             reg.QUERIES[n] = fake
             reg.ORACLE[n] = "SELECT 1"
-        live = qhash.content_hash(fake, "SELECT 1")
+        live = {"hash": qhash.content_hash(fake, "SELECT 1"),
+                "helpers": qhash.helper_hash(fake)}
         (tmp_path / "QUERY_HASHES.json").write_text(json.dumps({
-            "q_current": {"hash": live, "since_round": 1},
-            "q_rewritten": {"hash": "deadbeefdeadbeef", "since_round": 1},
-            "q_late_record": {"hash": live, "since_round": 4},
+            "q_current": {**live, "since_round": 1},
+            "q_rewritten": {**live, "hash": "deadbeefdeadbeef",
+                            "since_round": 1},
+            "q_late_record": {**live, "since_round": 4},
         }))
+        # before the round-end update the ledger decides alone, and
+        # drift() reports the stale entry
+        assert _driver_green_rounds(root=tmp_path) == {
+            "q_current": 2, "q_rewritten": 2}
+        assert "q_rewritten" in qhash.drift(tmp_path)
+        qhash.update_ledger(3, tmp_path)
+        after = json.loads((tmp_path / "QUERY_HASHES.json").read_text())
         green = _driver_green_rounds(root=tmp_path)
     finally:
         reg.QUERIES.clear()
         reg.QUERIES.update(saved_q)
         reg.ORACLE.clear()
         reg.ORACLE.update(saved_o)
+    assert after["q_rewritten"] == {**live, "since_round": 3}
+    assert after["q_current"]["since_round"] == 1
     assert green == {"q_current": 2}, green
 
 
 def test_query_hash_ledger_in_sync_with_registry():
-    """QUERY_HASHES.json must cover every registered query with the
-    CURRENT content hash — i.e. `python -m highload_kafka_streams_spark
-    .qhash update --round N` was re-run after the last query edit. A
-    drifted ledger silently demotes green queries and wastes driver
-    window slots on re-verification."""
+    """QUERY_HASHES.json must record every registered query, and only
+    those, with its CURRENT `hash` and `helpers` — i.e. `python -m
+    highload_kafka_streams_spark.qhash update --round N` was re-run
+    after the last query or helper edit. The driver-window gate trusts
+    the ledger's since_round without re-hashing, so a drifted ledger
+    would keep counting green evidence for code that has changed."""
     from highload_kafka_streams_spark import qhash
 
-    ledger = qhash.load_ledger()
-    assert ledger is not None, "QUERY_HASHES.json missing at repo root"
-    cur = qhash.current_hashes()
-    stale = sorted(
-        n for n, h in cur.items()
-        if n not in ledger or ledger[n].get("hash") != h
-    )
-    assert not stale, f"run qhash update; stale entries: {stale}"
-    orphans = sorted(n for n in ledger if n not in cur)
-    assert not orphans, f"ledger entries for unregistered queries: {orphans}"
+    assert qhash.drift() == [], "run qhash update"
+
+
+def test_registry_reads_ledger_without_hashing_sources(monkeypatch):
+    """The driver-facing registry path orders the window from the
+    committed ledger alone and must never hash query sources: keeping
+    the ledger in sync with the code is qhash.drift()'s job, enforced
+    by the tests and the full oracle preflight."""
+    from highload_kafka_streams_spark import qhash, registry
+
+    def no_hashing():  # pragma: no cover - reaching it is the failure
+        raise AssertionError("registry path must not hash query sources")
+
+    monkeypatch.setattr(qhash, "current_hashes", no_hashing)
+    monkeypatch.setattr(qhash, "current_helper_hashes", no_hashing)
+    names = list(registry.get_queries())
+    osql = registry.get_oracle_sql()
+    assert len(names) == len(registry.QUERIES) and set(osql) <= set(names)
 
 
 def test_qhash_update_ledger_roundtrip(tmp_path):
@@ -247,20 +268,26 @@ def test_qhash_update_ledger_roundtrip(tmp_path):
     from highload_kafka_streams_spark import qhash
 
     cur = qhash.current_hashes()
-    some = sorted(cur)[0]
-    # seed: one unchanged entry, one wrong-hash entry, rest missing
-    other = sorted(cur)[1]
+    cur_helpers = qhash.current_helper_hashes()
+    # seed: one unchanged entry, one wrong-hash entry, one entry with no
+    # helpers field, rest missing
+    some, other, bare = sorted(cur)[:3]
     (tmp_path / "QUERY_HASHES.json").write_text(json.dumps({
-        some: {"hash": cur[some], "since_round": 2},
-        other: {"hash": "0000000000000000", "since_round": 2},
+        some: {"hash": cur[some], "helpers": cur_helpers[some],
+               "since_round": 2},
+        other: {"hash": "0000000000000000", "helpers": cur_helpers[other],
+                "since_round": 2},
+        bare: {"hash": cur[bare], "since_round": 2},
     }))
     stats = qhash.update_ledger(7, tmp_path)
-    assert stats["unchanged"] == 1 and stats["changed"] == 1
-    assert stats["new"] == len(cur) - 2
+    assert stats["unchanged"] == 1 and stats["changed"] == 2
+    assert stats["new"] == len(cur) - 3
     after = json.loads((tmp_path / "QUERY_HASHES.json").read_text())
     assert after[some]["since_round"] == 2          # kept
     assert after[other]["since_round"] == 7         # re-stamped
     assert after[other]["hash"] == cur[other]
+    assert after[bare] == {"hash": cur[bare], "helpers": cur_helpers[bare],
+                           "since_round": 7}
 
 
 def test_coverage_header_counts_match_registry():
@@ -286,31 +313,35 @@ def test_coverage_header_counts_match_registry():
 def test_full_preflight_refuses_on_drifted_ledger(monkeypatch):
     """The full-preflight CLI (no explicit names) must FAIL before
     touching Spark when QUERY_HASHES.json is stale — the round-end
-    ritual then cannot certify a tree whose driver evidence is about to
-    be hash-demoted (the round-6 snapshot shipped exactly that)."""
+    ritual then cannot certify a tree whose ledger disagrees with the
+    code (the round-6 snapshot shipped exactly that). A helper-only
+    rewrite counts as drift too."""
     import sys
 
     from highload_kafka_streams_spark import qhash
     from highload_kafka_streams_spark.plans import oracle
 
-    # simulate drift: ledger missing one registered query
     real = qhash.load_ledger()
     assert real, "needs a real ledger to perturb"
-    drifted_ledger = dict(real)
-    victim = sorted(drifted_ledger)[0]
-    del drifted_ledger[victim]
-    monkeypatch.setattr(qhash, "load_ledger", lambda root=None: drifted_ledger)
-    assert victim in oracle.ledger_drift()
+    victim = sorted(real)[0]
+    # simulated drift: ledger missing one registered query, and a
+    # helper-only rewrite (same `hash`, moved `helpers`)
+    missing = {n: rec for n, rec in real.items() if n != victim}
+    helper_moved = {**real, victim: {**real[victim], "helpers": "f" * 16}}
 
-    # full run (argv names empty) → exit 2 BEFORE get_spark is reached
-    monkeypatch.setattr(sys, "argv", ["oracle", "/root/testdata/sf0.001"])
+    import highload_kafka_streams_spark.session as session
 
     def boom():  # pragma: no cover - reaching Spark means the gate failed
         raise AssertionError("preflight must refuse before starting Spark")
 
-    import highload_kafka_streams_spark.session as session
     monkeypatch.setattr(session, "get_spark", boom)
-    assert oracle.main() == 2
+    # full run (argv names empty) → exit 2 BEFORE get_spark is reached
+    monkeypatch.setattr(sys, "argv", ["oracle", "/root/testdata/sf0.001"])
+    for drifted_ledger in (missing, helper_moved):
+        monkeypatch.setattr(
+            qhash, "load_ledger", lambda root=None, led=drifted_ledger: led
+        )
+        assert oracle.main() == 2
 
     # targeted run (explicit names) skips the gate — but we stop at the
     # stubbed get_spark to keep the test cheap
@@ -407,12 +438,11 @@ def test_bench_scrape_tail_ignores_vs_prev_ratios():
 
 
 def test_green_rounds_helper_hash_gate(tmp_path):
-    """Round-9 contract (r8 advisor item 2): when the ledger records a
-    `helpers` hash, a green row additionally requires the query's LIVE
-    transitive private-helper closure to hash the same — a rewrite
-    hidden entirely inside a shared helper demotes every consumer.
-    Entries without a `helpers` field (pre-r9) gate on the main hash
-    alone."""
+    """Round-9 contract (r8 advisor item 2): a rewrite hidden entirely
+    inside a shared private helper demotes every consumer. The ledger
+    records each query's `helpers` hash; when the live closure moves,
+    the round-end `qhash update` re-stamps since_round, and the ledger
+    gate then drops the consumer's earlier green row."""
     import json
 
     from highload_kafka_streams_spark import qhash
@@ -423,40 +453,41 @@ def test_green_rounds_helper_hash_gate(tmp_path):
                 "hash_match": True, "err": None}
     (tmp_path / "CORRECTNESS_r02.json").write_text(json.dumps({
         "q_helper_ok": greenrow,     # helpers hash matches → green
-        "q_helper_moved": greenrow,  # recorded helpers != live → stale
-        "q_legacy": greenrow,        # no helpers field → main hash only
+        "q_helper_moved": greenrow,  # recorded helpers != live → re-stamped
     }))
 
     def fake(spark, sf_dir):  # pragma: no cover - never executed
         return None
 
-    # load BEFORE snapshotting: the helper gate triggers load_all()
-    # inside _driver_green_rounds, and restoring a pre-load (empty)
-    # snapshot with _loaded already True would wipe the registry for
-    # every later test in the process
+    # load BEFORE snapshotting: update_ledger() triggers load_all(), and
+    # restoring a pre-load (empty) snapshot with _loaded already True
+    # would wipe the registry for every later test in the process
     reg.load_all()
     saved_q = dict(reg.QUERIES)
     saved_o = dict(reg.ORACLE)
     try:
-        for n in ("q_helper_ok", "q_helper_moved", "q_legacy"):
+        for n in ("q_helper_ok", "q_helper_moved"):
             reg.QUERIES[n] = fake
             reg.ORACLE[n] = "SELECT 1"
-        live = qhash.content_hash(fake, "SELECT 1")
-        live_helpers = qhash.helper_hash(fake)  # "0"*16 — no helpers
+        live = {"hash": qhash.content_hash(fake, "SELECT 1"),
+                "helpers": qhash.helper_hash(fake)}  # "0"*16 — no helpers
         (tmp_path / "QUERY_HASHES.json").write_text(json.dumps({
-            "q_helper_ok": {"hash": live, "helpers": live_helpers,
-                            "since_round": 1},
-            "q_helper_moved": {"hash": live, "helpers": "feedfacefeedface",
+            "q_helper_ok": {**live, "since_round": 1},
+            "q_helper_moved": {**live, "helpers": "feedfacefeedface",
                                "since_round": 1},
-            "q_legacy": {"hash": live, "since_round": 1},
         }))
+        assert "q_helper_moved" in qhash.drift(tmp_path)
+        qhash.update_ledger(3, tmp_path)
+        after = json.loads((tmp_path / "QUERY_HASHES.json").read_text())
         green = _driver_green_rounds(root=tmp_path)
     finally:
         reg.QUERIES.clear()
         reg.QUERIES.update(saved_q)
         reg.ORACLE.clear()
         reg.ORACLE.update(saved_o)
-    assert green == {"q_helper_ok": 2, "q_legacy": 2}, green
+    assert after["q_helper_moved"] == {**live, "since_round": 3}
+    assert after["q_helper_ok"]["since_round"] == 1
+    assert green == {"q_helper_ok": 2}, green
 
 
 def test_helper_hash_tracks_transitive_private_closure():
@@ -478,23 +509,6 @@ def test_helper_hash_tracks_transitive_private_closure():
     assert h_walks != "0" * 16
     # a no-helper query hashes to the stable sentinel
     assert qhash.helper_hash(reg.QUERIES["q_filter"]) == "0" * 16
-
-
-def test_query_hash_ledger_helpers_in_sync():
-    """The committed ledger's `helpers` hashes must match the live
-    transitive closures — i.e. qhash update was re-run after the last
-    helper edit. (The main-hash sync test above catches query-body
-    drift; this catches helper-only drift.)"""
-    from highload_kafka_streams_spark import qhash
-
-    ledger = qhash.load_ledger()
-    assert ledger is not None
-    cur = qhash.current_helper_hashes()
-    stale = sorted(
-        n for n, rec in ledger.items()
-        if "helpers" in rec and rec["helpers"] != cur.get(n)
-    )
-    assert not stale, f"run qhash update; helper-stale entries: {stale}"
 
 
 def test_helper_hash_resolves_relative_imports(tmp_path):
