@@ -243,6 +243,23 @@ def test_query_hash_ledger_in_sync_with_registry():
     assert qhash.drift() == [], "run qhash update"
 
 
+def test_query_hash_ledger_helpers_in_sync():
+    """The committed ledger's `helpers` hashes must match the live
+    transitive closures — i.e. qhash update was re-run after the last
+    helper edit. The gate reads `helpers` straight from the ledger, so
+    every recorded query must carry the field."""
+    from highload_kafka_streams_spark import qhash
+
+    ledger = qhash.load_ledger()
+    assert ledger is not None
+    cur = qhash.current_helper_hashes()
+    stale = sorted(
+        n for n, rec in ledger.items()
+        if rec.get("helpers") != cur.get(n)
+    )
+    assert not stale, f"run qhash update; helper-stale entries: {stale}"
+
+
 def test_registry_reads_ledger_without_hashing_sources(monkeypatch):
     """The driver-facing registry path orders the window from the
     committed ledger alone and must never hash query sources: keeping
